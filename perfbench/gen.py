@@ -28,15 +28,17 @@ def write_parquet(table: pa.Table, path: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# soccer_etl: raw league-season JSON tree
+# nightly_batch soccer ETL: raw league-season JSON tree
 # ---------------------------------------------------------------------------
 
 # Two-letter league codes: the first ``n_leagues`` are in the league map,
 # the rest of the tree uses UNKNOWN_CODES, which the ETL's inner league
-# join must drop.
+# join must drop. 48 codes, the number of league codes in the reference
+# pipeline's league config (BASELINE.md, "Data scale").
 KNOWN_CODES = (
     "en de es it fr nl pt be at ch sc tr gr ru ua pl cz dk se no "
-    "fi ie hu ro hr rs bg sk si cy il is lu mt ee lv lt al ba by"
+    "fi ie hu ro hr rs bg sk si cy il is lu mt ee lv lt al ba by "
+    "md mk me ge am az kz fo"
 ).split()
 UNKNOWN_CODES = ("zz", "qx", "yy")
 
@@ -116,7 +118,7 @@ def _season_doc(rng, name, year, teams, alias_of, flat):
 
 
 def soccer_tree(
-    root: str, seed: int, n_leagues: int, n_seasons: int, n_teams: int
+    root: str, seed: int, n_leagues: int, n_seasons: int, team_counts: tuple[int, ...]
 ) -> SoccerTree:
     """Raw zone ``<root>/<yyyy-yy>/<code>.1[.vN].json``.
 
@@ -124,8 +126,9 @@ def soccer_tree(
     versions (natural version order, so ``v10`` beats ``v2``), shape
     flat or rounds-nested at random. Mixed in: malformed and
     required-field-missing documents (quarantined), and documents of
-    unknown league codes (dropped by the league join). About one team
-    name in five appears under an alias the alias map resolves."""
+    unknown league codes (dropped by the league join). Each league has a
+    seeded team count from ``team_counts``. About one team name in five
+    appears under an alias the alias map resolves."""
     rng = random.Random(seed)
     codes = KNOWN_CODES[:n_leagues]
     leagues = [(c, f"League {c.upper()} First Division") for c in codes]
@@ -133,7 +136,7 @@ def soccer_tree(
     teams_of: dict[str, list[str]] = {}
     alias_of: dict[str, str] = {}
     for c in codes + list(UNKNOWN_CODES):
-        teams = [f"{c.upper()} Club {i:02d}" for i in range(n_teams)]
+        teams = [f"{c.upper()} Club {i:02d}" for i in range(rng.choice(team_counts))]
         teams_of[c] = teams
         for t in teams[::3]:
             raw = t.replace("Club", "C.") + " FC"
@@ -203,7 +206,7 @@ def soccer_tree(
 
 
 # ---------------------------------------------------------------------------
-# corpus_build: documents, benchmark set, embeddings
+# nightly_batch corpus build: documents and embeddings
 # ---------------------------------------------------------------------------
 
 
@@ -216,23 +219,18 @@ def md5_bucket(doc_id: int, mod: int) -> int:
 @dataclass
 class Corpus:
     docs_path: str
-    bench_path: str
     emb_path: str
     n_docs: int
-    total_tokens: int
     exact_dups: list[int] = field(default_factory=list)
-    contaminated: list[int] = field(default_factory=list)
 
 
-def corpus(
-    root: str, seed: int, n_docs: int, dim: int = 64, n_bench: int = 20
-) -> Corpus:
+def corpus(root: str, seed: int, n_docs: int, dim: int = 64, n_quoted: int = 20) -> Corpus:
     """``n_docs`` Zipf-worded documents (doc_id, text, lang, source,
     n_chars) with injected exact duplicates (~3%), near duplicates
-    (~3%, a few words changed), documents quoting a benchmark item
-    (~2%), held-out documents quoting a train document verbatim
-    (~2%), a few too-short documents, and one 64-d embedding per
-    document (near duplicates get near-identical vectors)."""
+    (~3%, a few words changed), documents quoting one of ``n_quoted``
+    fixed passages (~2%), held-out documents quoting a train document
+    verbatim (~2%), a few too-short documents, and one 64-d embedding
+    per document (near duplicates get near-identical vectors)."""
     rng = np.random.default_rng(seed)
     vocab = np.array([f"w{i}" for i in range(4000)] + ["the", "a"])
     p = 1.0 / np.arange(1, 4001) ** 1.05
@@ -241,40 +239,35 @@ def corpus(
     def words(n: int) -> list[str]:
         return list(rng.choice(vocab, size=n, p=p))
 
-    bench = [" ".join(words(int(rng.integers(30, 60)))) for _ in range(n_bench)]
+    quoted = [" ".join(words(int(rng.integers(30, 60)))) for _ in range(n_quoted)]
     texts: list[str] = []
-    kinds: list[str] = []
     src_of: dict[int, int] = {}  # duplicate -> the earlier doc it copies
+    exact: list[int] = []
     for i in range(n_docs):
         r = rng.random()
         if i > 10 and r < 0.03:
             src_of[i] = int(rng.integers(0, i))
             texts.append(texts[src_of[i]])
-            kinds.append("exact")
+            exact.append(i)
         elif i > 10 and r < 0.06:
             src_of[i] = int(rng.integers(0, i))
             w = texts[src_of[i]].split(" ")
             for _ in range(max(1, len(w) // 25)):
                 w[int(rng.integers(0, len(w)))] = str(rng.choice(vocab[:2000]))
             texts.append(" ".join(w))
-            kinds.append("near")
         elif r < 0.08:
-            b = bench[int(rng.integers(0, n_bench))].split(" ")
+            b = quoted[int(rng.integers(0, n_quoted))].split(" ")
             s = int(rng.integers(0, len(b) - 8))
             texts.append(" ".join(words(40) + b[s : s + 8] + words(40)))
-            kinds.append("contaminated")
         elif i > 10 and r < 0.10 and md5_bucket(i, 100) >= 80:
             src = int(rng.integers(0, i))
             w = texts[src].split(" ")
             s = int(rng.integers(0, max(1, len(w) - 12)))
             texts.append(" ".join(words(50) + w[s : s + 12] + words(50)))
-            kinds.append("leak")
         elif r < 0.11:
             texts.append(" ".join(words(int(rng.integers(3, 15)))))
-            kinds.append("short")
         else:
             texts.append(" ".join(words(int(rng.integers(60, 200)))))
-            kinds.append("plain")
     ids = np.arange(n_docs, dtype=np.int64)
     n_chars = np.array([len(t) for t in texts], dtype=np.int64)
     docs = pa.table(
@@ -297,18 +290,11 @@ def corpus(
     )
     out = Corpus(
         docs_path=os.path.join(root, "documents.parquet"),
-        bench_path=os.path.join(root, "benchmark.parquet"),
         emb_path=os.path.join(root, "embeddings.parquet"),
         n_docs=n_docs,
-        total_tokens=sum(len(t.split()) for t in texts),
+        exact_dups=exact,
     )
-    for i, k in enumerate(kinds):
-        if k == "exact":
-            out.exact_dups.append(i)
-        elif k == "contaminated":
-            out.contaminated.append(i)
     write_parquet(docs, out.docs_path)
-    write_parquet(pa.table({"text": bench}), out.bench_path)
     write_parquet(embeddings, out.emb_path)
     return out
 
@@ -321,6 +307,7 @@ def corpus(
 @dataclass
 class Vectors:
     base_path: str  # (vec_id, label, embedding) indexed at set-up
+    base: np.ndarray  # the same vectors, row i = vec_id i
     centers: np.ndarray
     rng: np.random.Generator  # continues the seeded stream for queries
 
@@ -342,7 +329,7 @@ def vectors(root: str, seed: int, n_base: int, dim: int = 64, n_clusters: int = 
     x, lab = _clustered(rng, centers, n_base)
     path = os.path.join(root, "base", "part-0.parquet")
     write_parquet(vec_table(np.arange(n_base, dtype=np.int64), x, lab), path)
-    return Vectors(base_path=path, centers=centers, rng=rng)
+    return Vectors(base_path=path, base=x, centers=centers, rng=rng)
 
 
 def vec_table(ids: np.ndarray, x: np.ndarray, lab: np.ndarray) -> pa.Table:
@@ -362,21 +349,18 @@ def query_batch(v: Vectors, first_id: int, n: int) -> tuple[np.ndarray, np.ndarr
     return np.arange(first_id, first_id + n, dtype=np.int64), x
 
 
-def append_batch(v: Vectors, first_id: int, n: int) -> pa.Table:
+def append_batch(v: Vectors, first_id: int, n: int) -> tuple[pa.Table, np.ndarray]:
     x, lab = _clustered(v.rng, v.centers, n)
-    return vec_table(np.arange(first_id, first_id + n, dtype=np.int64), x, lab)
+    return vec_table(np.arange(first_id, first_id + n, dtype=np.int64), x, lab), x
 
 
 # ---------------------------------------------------------------------------
-# star_analytics: TPC-H-shaped star schema + events
+# nightly_batch star queries: TPC-H-shaped star schema
 # ---------------------------------------------------------------------------
 
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-EVENT_TYPES = ["click", "view", "purchase", "error", "login"]
-PART_WORDS = ["small", "large", "red", "blue", "steel", "brass"]
-PART_NOUNS = ["ring", "widget", "bolt", "gear", "valve", "pipe"]
 
 
 def _ts(us: np.ndarray) -> pa.Array:
@@ -388,16 +372,15 @@ def _money(rng, lo, hi, n):
 
 
 def star_tables(root: str, seed: int, n_orders: int) -> dict[str, int]:
-    """region/nation/customer/supplier/part/orders/lineitem/events
-    parquet under ``root`` with the column names, types and value
-    domains of the registry's star schema (orders = ``n_orders``,
-    customers = orders/10, ~4 lines per order, events = 2/3 orders).
-    Money has two decimals, as the oracles' cent arithmetic expects."""
+    """region/nation/customer/supplier/orders/lineitem parquet under
+    ``root`` with the column names, types and value domains of the
+    registry's star schema (orders = ``n_orders``, customers =
+    orders/10, ~4 lines per order). Money has two decimals, as the
+    oracles' cent arithmetic expects."""
     rng = np.random.default_rng(seed)
     n_cust = max(50, n_orders // 10)
     n_supp = max(20, n_orders // 150)
     n_part = max(50, n_orders // 8)
-    n_events = n_orders * 2 // 3
     day = 86_400_000_000
     t0 = np.datetime64("1995-01-01", "us").astype(np.int64)
     tables = {
@@ -426,19 +409,6 @@ def star_tables(root: str, seed: int, n_orders: int) -> dict[str, int]:
                 "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
                 "s_nationkey": pa.array(rng.integers(0, 25, n_supp), pa.int32()),
                 "s_acctbal": _money(rng, -999, 9999, n_supp),
-            }
-        ),
-        "part": pa.table(
-            {
-                "p_partkey": np.arange(n_part, dtype=np.int64),
-                "p_name": [
-                    f"{PART_WORDS[a]} {PART_NOUNS[b]}"
-                    for a, b in zip(rng.integers(0, 6, n_part), rng.integers(0, 6, n_part))
-                ],
-                "p_brand": [f"Brand#{i}" for i in rng.integers(1, 26, n_part)],
-                "p_type": list(rng.choice(["ECONOMY", "STANDARD", "SMALL", "LARGE"], n_part)),
-                "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-                "p_retailprice": np.round(900 + np.arange(n_part) * 0.1 % 1100, 2),
             }
         ),
     }
@@ -471,18 +441,6 @@ def star_tables(root: str, seed: int, n_orders: int) -> dict[str, int]:
             "l_returnflag": list(rng.choice(["A", "N", "R"], n_li)),
             "l_linestatus": list(rng.choice(["F", "O"], n_li)),
             "l_shipdate": _ts(np.repeat(odate, per) + rng.integers(1, 122, n_li) * day),
-        }
-    )
-    e0 = np.datetime64("2024-01-01", "us").astype(np.int64)
-    gaps = rng.exponential(200e6, n_events).astype(np.int64)
-    tables["events"] = pa.table(
-        {
-            "event_id": np.arange(n_events, dtype=np.int64),
-            "ts": _ts(e0 + np.cumsum(gaps)),
-            "user_id": rng.integers(0, max(10, n_events // 200), n_events).astype(np.int64),
-            "event_type": list(rng.choice(EVENT_TYPES, n_events)),
-            "value": np.round(rng.exponential(10, n_events), 2),
-            "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, n_events)],
         }
     )
     for name, t in tables.items():

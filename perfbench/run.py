@@ -1,14 +1,16 @@
 """Benchmark command: one workload, one seed, one process.
 
-    python3 perfbench/run.py --workload soccer_etl --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload nightly_batch --seed 1 --seconds 1 --trace 0
 
 Run from the repository root. It starts a ``local[N]`` session through
-the engine's ``get_spark`` (N = usable cores), sets up seeded inputs,
-runs the workload's operations closed-loop from one client thread for
-``--seconds`` seconds, checks the outputs, and prints one JSON object
-as the last line of stdout: the end-to-end metrics with ``--trace 0``,
-the per-layer metrics of a traced run with ``--trace 1``. Earlier
-stdout lines carry the run's detail record (and, traced, its spans).
+the engine's ``get_spark`` (N = usable cores; the engine's own defaults
+otherwise, its JVM heap included), sets up seeded inputs, runs whole
+cycles of the workload's operations closed-loop from one client thread
+until ``--seconds`` seconds have passed, checks the outputs, and prints
+one JSON object as the last line of stdout: the end-to-end metrics
+with ``--trace 0``, the per-layer metrics of a traced run with
+``--trace 1``. Earlier stdout lines carry the run's detail record (and,
+traced, its spans).
 Every file the run writes lives under a fresh ``.perfbench_tmp/``
 directory in the repository root, removed before exit. The exit code
 is non-zero when an operation or a correctness check failed.
@@ -21,6 +23,7 @@ import time
 T_START = time.perf_counter()  # set-up time is measured from here
 
 import argparse  # noqa: E402
+import gc  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import resource  # noqa: E402
@@ -34,7 +37,6 @@ from dataclasses import dataclass  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 ENGINE = "soccer_data_pipeline_spark"
-DRIVER_MEM = "2g"  # the engine's 8g default would crowd a shared host
 
 
 @dataclass
@@ -64,6 +66,26 @@ def vm_hwm_kb(pid: int) -> int:
     return 0
 
 
+def jvm_live_mb(spark) -> dict:
+    """Memory the session's JVM holds on to, in MB: heap in use after full
+    collections, and non-heap in use (class metadata, compiled code)."""
+    jvm = spark.sparkContext._jvm
+    mem = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    # Python first: frames left in reference cycles still pin their JVM
+    # twins. A JVM collection hands dropped broadcasts, shuffles and
+    # checkpoints to Spark's cleaner thread, and only a later one frees
+    # them, so collect until the heap stops shrinking.
+    gc.collect()
+    heap = None
+    for _ in range(6):
+        jvm.java.lang.System.gc()
+        prev, heap = heap, mem.getHeapMemoryUsage().getUsed() / 2**20
+        if prev is not None and prev - heap < 1.0:
+            break
+        time.sleep(1.0)
+    return {"heap": heap, "non_heap": mem.getNonHeapMemoryUsage().getUsed() / 2**20}
+
+
 def tail(values: list[float]) -> dict:
     """The highest percentile with at least ten samples beyond it."""
     n = len(values)
@@ -84,7 +106,6 @@ def isolate_tmp(tmp: str) -> None:
         f"-Djava.io.tmpdir={os.path.join(tmp, 'tmp')} -Dderby.system.home={tmp} "
         "-XX:-UsePerfData"
     )
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     import tempfile
 
     tempfile.tempdir = None  # re-read TMPDIR
@@ -129,9 +150,6 @@ def main() -> int:
                 "spark.ui.showConsoleProgress": "false",
                 "spark.local.dir": os.path.join(tmp, "local"),
                 "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
-                # a heap sized and touched up front keeps peak RSS from
-                # following the collector's run-to-run resize decisions
-                "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch",
             },
         )
         proc = SparkContext._gateway.proc
@@ -183,61 +201,45 @@ def measure(args, wl, tracer, t_session, host_before, jvm_pid) -> int:
         t = time.perf_counter()
         wl.prepare(rep)
         reps.append(time.perf_counter() - t)
-    # Warm-up is part of set-up: one untraced operation, so that the
-    # timed window sees the steady state a long-lived session serves.
-    tracer.enabled = False
-    tracer.op = -100
-    t = time.perf_counter()
-    wl.warmup()
-    warmup_s = time.perf_counter() - t
-    setup_s = t_session + statistics.median(reps) + warmup_s
+    setup_s = t_session + statistics.median(reps)
 
-    # Timed window, closed loop. A traced run executes each operation of
-    # the primary kind twice, traced then untraced, so that the tracing
-    # overhead compares like with like, and runs at least
-    # ``wl.trace_ops`` operations so that every span kind is recorded.
+    # Timed window, closed loop, whole cycles: it ends on the first cycle
+    # boundary after ``--seconds``, so every operation kind of the cycle
+    # is timed in every run and throughput does not depend on where the
+    # window cuts.
     lat: dict[str, list[float]] = {}
-    traced_lat: dict[str, list[float]] = {}
-    items = ops = failed_ops = 0
-    j = 0
+    items = ops = failed_ops = cycles = 0
     t_win = time.perf_counter()
     while True:
-        traced = bool(args.trace)
-        while True:
-            tracer.enabled = traced
-            tracer.op = j
+        for kind in wl.CYCLE:
+            tracer.op = ops
             t = time.perf_counter()
             try:
-                kind, n = wl.op(j)
+                items += wl.op(kind)
             except Exception:  # noqa: BLE001 - a failed operation is counted, not fatal
                 traceback.print_exc()
                 failed_ops += 1
-                kind, n = "failed", 0
-            dt = time.perf_counter() - t
-            (traced_lat if traced else lat).setdefault(kind, []).append(dt)
-            if not traced:
-                items += n
+                kind = "failed"
+            lat.setdefault(kind, []).append(time.perf_counter() - t)
             ops += 1
-            if not (traced and kind == wl.primary):
-                break
-            traced = False
-        j += 1
-        elapsed = time.perf_counter() - t_win
-        if elapsed >= args.seconds and (not args.trace or j >= wl.trace_ops):
+        cycles += 1
+        window_s = time.perf_counter() - t_win
+        if window_s >= args.seconds:
             break
     tracer.enabled = False
-    untraced_elapsed = sum(sum(v) for v in lat.values())
+    live_mb = jvm_live_mb(wl.spark)
 
+    t = time.perf_counter()
     try:
         checks = wl.check()
     except Exception as e:  # noqa: BLE001 - a check that cannot run has failed
         traceback.print_exc()
         checks = [("checks_ran", False, repr(e))]
+    check_s = time.perf_counter() - t
     failed_checks = [c for c in checks if not c[1]]
     for name, ok, detail in checks:
         print(f"perfbench check {name}: {'ok' if ok else 'FAILED'} ({detail})", file=sys.stderr)
 
-    primary = wl.primary
     jvm_kb = vm_hwm_kb(jvm_pid)
     py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
     attempted = ops + len(checks)
@@ -251,26 +253,26 @@ def measure(args, wl, tracer, t_session, host_before, jvm_pid) -> int:
         "host_end": stamp(),
         "setup_reps_s": reps,
         "session_start_s": t_session,
-        "warmup_s": warmup_s,
+        "cycles": cycles,
+        "window_s": window_s,
+        "check_s": check_s,
         "latency_s": lat,
-        "traced_latency_s": traced_lat,
         "tail": {k: tail(v) for k, v in lat.items()},
         "items": items,
         "failed_ratio": failed / attempted,
         "checks": [{"name": c[0], "ok": c[1], "detail": c[2]} for c in checks],
         "jvm_peak_rss_kb": jvm_kb,
         "python_peak_rss_kb": py_kb,
+        "jvm_live_mb": live_mb,
+        **wl.detail,
     }
-    if args.trace:
-        base = lat.get(primary, [])
-        traced = traced_lat.get(primary, [])
-        overhead = (
-            statistics.median(traced) - statistics.median(base) if base and traced else 0.0
-        )
-        layers = {k: 0 for k in workloads.BENCHMARK_LAYERS + wl.LAYERS}
+    if failed:
+        metrics = {}
+    elif args.trace:
+        layers = {k: 0 for k in workloads.BENCHMARK_LAYERS}
         layers.update(wl.layers())
         layers.update({f"trace.{k}": v for k, v in tracer.totals().items()})
-        layers["trace.overhead_s"] = overhead
+        layers["trace.overhead_s"] = tracer.overhead_s()
         layers["session.get_spark_s"] = t_session
         detail["spans"] = [
             {k: v for k, v in s.items() if k not in ("start", "end")}
@@ -280,10 +282,10 @@ def measure(args, wl, tracer, t_session, host_before, jvm_pid) -> int:
     else:
         metrics = {
             "setup_s": {"value": setup_s, "unit": "s"},
-            "op_p50_s": {"value": statistics.median(lat[primary]), "unit": "s"},
-            "items_per_s": {"value": items / max(untraced_elapsed, 1e-9), "unit": "1/s"},
-            "peak_rss_mb": {"value": (jvm_kb + py_kb) / 1024.0, "unit": "MB"},
-        } if primary in lat else {}
+            "op_p50_s": {"value": statistics.median(lat[wl.primary]), "unit": "s"},
+            "items_per_s": {"value": items / window_s, "unit": "1/s"},
+            "jvm_live_mb": {"value": sum(live_mb.values()), "unit": "MB"},
+        }
     detail["metrics"] = metrics
     print(json.dumps({"detail": detail}))
     result = {
@@ -293,7 +295,7 @@ def measure(args, wl, tracer, t_session, host_before, jvm_pid) -> int:
         "metrics": metrics,
     }
     print(json.dumps(result))
-    return 0 if failed == 0 and metrics else 1
+    return 0 if failed == 0 else 1
 
 
 def unit_of(name: str) -> str:

@@ -39,13 +39,15 @@ def generators():
         v = gen.vectors(root, seed, ann.N_BASE, ann.DIM)
         ids, x = gen.query_batch(v, 0, ann.QUERIES)
         gen.write_parquet(gen.vec_table(ids, x, ids), os.path.join(root, "q", "q.parquet"))
-        gen.write_parquet(gen.append_batch(v, 10**9, ann.APPEND), os.path.join(root, "a.parquet"))
+        appended, _ = gen.append_batch(v, 10**9, ann.APPEND)
+        gen.write_parquet(appended, os.path.join(root, "a.parquet"))
 
+    batch = workloads.NightlyBatch
     return {
-        "soccer_tree": lambda root, seed: gen.soccer_tree(root, seed, **workloads.SoccerEtl.SIZES),
+        "soccer_tree": lambda root, seed: gen.soccer_tree(root, seed, **batch.SOCCER),
+        "star_tables": lambda root, seed: gen.star_tables(root, seed, batch.N_ORDERS),
+        "corpus": lambda root, seed: gen.corpus(root, seed, batch.N_DOCS),
         "vectors": ann_inputs,
-        "star_tables": lambda root, seed: gen.star_tables(root, seed, workloads.StarAnalytics.N_ORDERS),
-        "corpus": lambda root, seed: gen.corpus(root, seed, workloads.CorpusBuild.N_DOCS),
     }
 
 

@@ -9,6 +9,9 @@ are printed when the run ends.
 Spark is lazy: a stage span materializes its output through the
 ``noop`` sink, which re-executes everything before it. Such a span names
 its ``prefix`` spans, and its self time is its duration minus theirs.
+A span marked ``extra`` wraps work that only a traced run does (those
+materializations); the tracing overhead is the time of the extra spans
+plus the tracer's own bookkeeping.
 """
 
 from __future__ import annotations
@@ -30,19 +33,22 @@ class Tracer:
         self.enabled = enabled
         self.spans: list[dict] = []
         self.op = 0  # the timed operation the next spans belong to
+        self.bookkeeping_s = 0.0  # time spent in the tracer itself
         self._stack: list[dict] = []
 
     @contextmanager
-    def span(self, name: str, prefix: tuple[str, ...] = ()):
+    def span(self, name: str, prefix: tuple[str, ...] = (), extra: bool = False):
         if not self.enabled:
             yield {}
             return
+        t0 = time.perf_counter()
         rec = {
             "id": len(self.spans),
             "name": name,
             "op": self.op,
             "parent": self._stack[-1]["id"] if self._stack else None,
             "prefix": list(prefix),
+            "extra": extra,
         }
         self.spans.append(rec)
         group = f"perfbench-{rec['id']}"
@@ -50,6 +56,7 @@ class Tracer:
         self.sc.setJobGroup(group, name)
         self._stack.append(rec)
         rec["start"] = time.perf_counter()
+        self.bookkeeping_s += rec["start"] - t0
         try:
             yield rec
         finally:
@@ -61,6 +68,7 @@ class Tracer:
             else:
                 self.sc.setJobGroup(prev[0], prev[1] or "")
             rec.update(self._spark_counts(group))
+            self.bookkeeping_s += time.perf_counter() - rec["end"]
 
     def _spark_counts(self, group: str) -> dict:
         st = self.sc.statusTracker()
@@ -102,8 +110,8 @@ class Tracer:
     def per_op(self, name: str, field: str = "self_s") -> float:
         """Median over traced operations of the summed ``field`` of the
         spans called ``name`` in each operation (0 when none ran).
-        Set-up and warm-up run under negative operation numbers and
-        count only for a span that never ran in the timed window."""
+        Set-up runs under negative operation numbers and counts only
+        for a span that never ran in the timed window."""
         sums: dict[int, float] = {}
         for s in self.self_times():
             if s["name"] == name:
@@ -111,6 +119,24 @@ class Tracer:
         timed = [v for op, v in sums.items() if op >= 0]
         vals = timed or list(sums.values())
         return statistics.median(vals) if vals else 0.0
+
+    def overhead_s(self) -> float:
+        """Work a traced run adds: its extra spans (outermost only) plus
+        the tracer's bookkeeping."""
+        by_id = {s["id"]: s for s in self.spans}
+
+        def inside_extra(s) -> bool:
+            p = s["parent"]
+            while p is not None:
+                if by_id[p]["extra"]:
+                    return True
+                p = by_id[p]["parent"]
+            return False
+
+        extra = sum(
+            s["end"] - s["start"] for s in self.spans if s["extra"] and not inside_extra(s)
+        )
+        return extra + self.bookkeeping_s
 
     def totals(self) -> dict:
         return {
