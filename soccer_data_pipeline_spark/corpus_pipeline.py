@@ -1,11 +1,15 @@
 """[beyond-ref] End-to-end training-corpus build — the LLM-tier analog
-of ``pipeline.run_soccer_etl``: ONE lazy composition from a raw
-documents frame to the training-ready artifact frames.
+of ``pipeline.run_soccer_etl``: from a raw documents frame to the
+training-ready artifact frames.
 
     clean (quality → exact dedup → near-dup + verbatim-overlap clusters)
+      → decontaminate (optional: benchmark n-gram overlap)
+      → semantic dedup (optional: SemDeDup over the docs' embeddings)
       → select (optional: budgeted keep set under a token budget,
                 quality-score or DSIR-weight ranked)
       → split (hash-deterministic train/val/test)
+      → leakage repair (optional: quarantine held-out docs sharing
+                        train n-grams)
       → shard (md5-bucket output sharding)
       → manifest (per split × shard audit)
 
@@ -15,11 +19,32 @@ individually (``corpus_clean_decisions``, ``train_val_test_split``,
 coverage; the integration test additionally asserts the composed
 decisions are row-identical to the registered query's.
 
-All outputs are lazy DataFrames — the caller writes
-``corpus.repartition("shard_id").write.partitionBy("split", ...)`` so
-each output shard is one task's sequential write. Determinism is
-end-to-end: every assignment is a pure function of doc_id/text, so a
-re-run (or a backfill at 100 TB) reproduces byte-identical shards.
+Materialized-ledger contract. The build is driven by ONE
+``(doc_id, decision)`` ledger: cleaning's decisions are materialized
+once (eager ``localCheckpoint``), each optional stage reads its input
+as ``docs``/``embeddings`` left-semi-joined to the ledger's keep ids,
+its per-doc action ledger is materialized once, and its drop reason
+folds into a re-materialized ledger (:func:`_fold`). So the stages run
+their eager jobs inside :func:`run_corpus_build`, and no consumer
+(a later stage, the corpus write, the decisions write) re-executes an
+earlier stage's lineage: ``decisions`` IS the final ledger (writing it
+is one scan job) and ``corpus`` reads only ``docs`` and that ledger.
+Only doc-count-sized frames are materialized — the ledgers and the
+action frames, never text or vectors (``operators/cache.py`` forbids
+corpus-sized checkpoints). ``corpus`` and ``manifest`` stay lazy: the
+caller writes ``corpus.repartition("shard_id").write.partitionBy(
+"split", ...)`` so each output shard is one task's sequential write.
+
+Block ownership follows ``cache.materialize_owned``: the checkpoint
+blocks are GC-owned — Spark's ContextCleaner drops them once the
+returned frames are dropped, or the caller's unit-of-work
+``release_session_blocks`` boundary does. Nothing here unpersists a
+ledger: a localCheckpoint's lineage is truncated, so a returned frame
+reading released blocks could not be recomputed.
+
+Determinism is end-to-end: every assignment is a pure function of
+doc_id/text, so a re-run (or a backfill at 100 TB) reproduces
+byte-identical shards.
 """
 
 from __future__ import annotations
@@ -28,6 +53,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .operators.cache import materialize_owned
 
 
 def md5_bucket(col, mod: int):
@@ -38,6 +65,37 @@ def md5_bucket(col, mod: int):
     return (
         F.conv(F.substring(F.md5(col.cast("string")), 1, 4), 16, 10).cast("long")
         % mod
+    )
+
+
+def _kept(frame: DataFrame, ledger: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """``frame`` restricted to the ledger's keep ids (joined on ``id_col``).
+
+    The keep ids ride a broadcast (8 bytes per kept doc): a checkpoint
+    carries its source plan's size estimate, and the left joins behind
+    every ledger multiply that estimate out, so unhinted the planner
+    picks a sort-merge join and shuffles ``frame`` — the docs' text or
+    the embedding vectors — for every stage input and output."""
+    keep = ledger.where(F.col("decision") == "keep").select(
+        F.col("doc_id").alias(id_col)
+    )
+    return frame.join(F.broadcast(keep), id_col, "left_semi")
+
+
+def _fold(ledger: DataFrame, dropped: DataFrame, reason: str) -> DataFrame:
+    """Fold one stage's drops into the ledger and re-materialize it:
+    the rows whose doc_id is in ``dropped`` read ``reason``. Every stage
+    acts on the current keep set only, so only 'keep' rows change and
+    an earlier stage's drop reason stands; ``dropped`` is a subset of
+    the keep ids, so it broadcasts for the reason :func:`_kept` gives."""
+    hit = dropped.select("doc_id").withColumn("_hit", F.lit(True))
+    return materialize_owned(
+        ledger.join(F.broadcast(hit), "doc_id", "left").select(
+            "doc_id",
+            F.when(F.coalesce(F.col("_hit"), F.lit(False)), reason)
+            .otherwise(F.col("decision"))
+            .alias("decision"),
+        )
     )
 
 
@@ -71,7 +129,12 @@ def run_corpus_build(
     dsir_target_sources: tuple[str, ...] = ("src0", "src1", "src2", "src3"),
     **clean_kwargs,
 ) -> CorpusBuildOutputs:
-    """Build the full corpus-assembly plan (lazy — caller writes).
+    """Run the corpus build's stages and return its output frames.
+
+    Runs every stage's eager jobs and materializes the decisions ledger
+    and the action frames (see the module docstring); ``corpus`` and
+    ``manifest`` are lazy over ``docs`` and the final ledger — the
+    caller writes them.
 
     ``docs`` needs (doc_id, text, n_chars); ``clean_kwargs`` pass
     through to :func:`operators.corpus.clean_decisions` (minhash
@@ -140,51 +203,37 @@ def run_corpus_build(
         split_leakage_actions,
     )
 
-    decisions = clean_decisions(docs, **clean_kwargs)
-    kept = docs.join(
-        decisions.where(F.col("decision") == "keep"), "doc_id", "left_semi"
-    )
+    ledger = materialize_owned(clean_decisions(docs, **clean_kwargs))
     contamination_df = None
     if benchmark is not None:
-        contamination_df = contamination_actions(
-            kept, benchmark, n=contamination_ngram
+        contamination_df = materialize_owned(
+            contamination_actions(
+                _kept(docs, ledger), benchmark, n=contamination_ngram
+            )
         )
-        dropped = (
-            contamination_df.where(F.col("action") == "drop_contaminated")
-            .select("doc_id")
-            .withColumn("_ct", F.lit(True))
-        )
-        kept = kept.join(dropped, "doc_id", "left_anti")
-        decisions = decisions.join(dropped, "doc_id", "left").select(
-            "doc_id",
-            F.when(F.coalesce(F.col("_ct"), F.lit(False)), "drop_contaminated")
-            .otherwise(F.col("decision"))
-            .alias("decision"),
+        ledger = _fold(
+            ledger,
+            contamination_df.where(F.col("action") == "drop_contaminated"),
+            "drop_contaminated",
         )
     semantic_df = None
     if embeddings is not None:
         from .operators.semdedup import semantic_actions
 
-        vecs = embeddings.join(
-            kept.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
+        vecs = _kept(embeddings, ledger, id_col="vec_id")
+        semantic_df = materialize_owned(
+            semantic_actions(vecs, tau=semantic_tau).select(
+                F.col("vec_id").alias("doc_id"), "action"
+            )
         )
-        semantic_df = semantic_actions(vecs, tau=semantic_tau).select(
-            F.col("vec_id").alias("doc_id"), "action"
-        )
-        dropped_sem = (
-            semantic_df.where(F.col("action") == "drop_semantic")
-            .select("doc_id")
-            .withColumn("_sd", F.lit(True))
-        )
-        kept = kept.join(dropped_sem, "doc_id", "left_anti")
-        decisions = decisions.join(dropped_sem, "doc_id", "left").select(
-            "doc_id",
-            F.when(F.coalesce(F.col("_sd"), F.lit(False)), "drop_semantic")
-            .otherwise(F.col("decision"))
-            .alias("decision"),
+        ledger = _fold(
+            ledger,
+            semantic_df.where(F.col("action") == "drop_semantic"),
+            "drop_semantic",
         )
     selection_df = None
     if token_budget is not None:
+        kept = _kept(docs, ledger)
         if selection == "quality":
             scored = quality_pm(kept)
         elif selection == "dsir":
@@ -195,29 +244,11 @@ def run_corpus_build(
             )
         else:
             raise ValueError(f"unknown selection scorer: {selection!r}")
-        selection_df = budget_select(scored, token_budget)
-        kept = kept.join(
-            selection_df.where(F.col("selected")).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
-        # fold the budget cut into the decisions ledger (ADVICE r9): a
-        # clean-kept doc the selection excluded reads 'drop_budget', so
-        # the decisions↔corpus reconciliation invariant (corpus count ==
-        # decisions keep count) holds under token_budget too. Selection
-        # only scored clean-kept docs, so the left join can only rewrite
-        # 'keep' rows.
-        cut = (
-            selection_df.where(~F.col("selected"))
-            .select("doc_id")
-            .withColumn("_cut", F.lit(True))
-        )
-        decisions = decisions.join(cut, "doc_id", "left").select(
-            "doc_id",
-            F.when(F.coalesce(F.col("_cut"), F.lit(False)), "drop_budget")
-            .otherwise(F.col("decision"))
-            .alias("decision"),
-        )
+        selection_df = materialize_owned(budget_select(scored, token_budget))
+        # the budget cut folds in as 'drop_budget' (ADVICE r9), so the
+        # corpus count == decisions keep count reconciliation holds
+        # under token_budget too
+        ledger = _fold(ledger, selection_df.where(~F.col("selected")), "drop_budget")
     split_bucket = md5_bucket(F.col("doc_id"), 100)
     split_assign = (
         F.when(split_bucket < train_pct, "train")
@@ -230,38 +261,37 @@ def run_corpus_build(
         # never occupy shard slots or training-order positions; split
         # assignment is a pure doc_id hash, so computing it here and
         # again below lands every surviving doc in the same split.
-        leakage_df = split_leakage_actions(
-            kept.select("doc_id", "text", split_assign.alias("split")),
-            n=leakage_ngram,
+        leakage_df = materialize_owned(
+            split_leakage_actions(
+                _kept(docs, ledger).select(
+                    "doc_id", "text", split_assign.alias("split")
+                ),
+                n=leakage_ngram,
+            )
         )
-        quarantined = (
-            leakage_df.where(F.col("action") == "quarantine_leakage")
-            .select("doc_id")
-            .withColumn("_ql", F.lit(True))
+        ledger = _fold(
+            ledger,
+            leakage_df.where(F.col("action") == "quarantine_leakage"),
+            "quarantine_leakage",
         )
-        kept = kept.join(quarantined, "doc_id", "left_anti")
-        decisions = decisions.join(quarantined, "doc_id", "left").select(
-            "doc_id",
-            F.when(F.coalesce(F.col("_ql"), F.lit(False)), "quarantine_leakage")
-            .otherwise(F.col("decision"))
-            .alias("decision"),
-        )
-    corpus = kept.select(
+    corpus = _kept(docs, ledger).select(
         "*",
         split_assign.alias("split"),
         md5_bucket(F.col("doc_id"), n_shards).alias("shard_id"),
     )
     if order_seed is not None:
-        order = shuffle_order(kept, seed=order_seed).select(
-            "doc_id", F.col("global_pos").alias("train_order")
-        )
+        # shuffle_order reads only doc_id: rank the ledger's keep ids
+        order = shuffle_order(
+            ledger.where(F.col("decision") == "keep").select("doc_id"),
+            seed=order_seed,
+        ).select("doc_id", F.col("global_pos").alias("train_order"))
         corpus = corpus.join(order, "doc_id")
     manifest = corpus.groupBy("split", "shard_id").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
     )
     return CorpusBuildOutputs(
-        decisions=decisions,
+        decisions=ledger,
         corpus=corpus,
         manifest=manifest,
         selection=selection_df,

@@ -15,6 +15,33 @@ def _docs(spark):
     return load_table(spark, SF, "documents")
 
 
+def _docs_with_leaked_pair(spark):
+    """The fixture plus one leaked (train, val) pair.
+
+    The sf0.001 fixture audits clean AFTER cleaning (dedup-before-split
+    doing its job), so inject one leaked pair that every cleaning tier
+    passes: a shared 8-gram of single-char tokens (15 chars — SHORTER
+    than the winnowing k=16, so the run cannot contain one full
+    winnowing k-gram and the verbatim tier cannot see it; this is
+    precisely the sub-fingerprint leakage the n-gram audit exists to
+    catch) in otherwise-unrelated quality-passing docs, ids hashing to
+    train (100000) and val (100006) under the md5 split bucket."""
+    from pyspark.sql import functions as F
+
+    shared = "j k l m n o p q"
+    mk = lambda stem: (  # noqa: E731
+        "a "
+        + " ".join(f"{stem}{i}" for i in range(30))
+        + f" {shared} "
+        + " ".join(f"{stem}{i}" for i in range(30, 60))
+    )
+    injected = spark.createDataFrame(
+        [(100000, mk("alpha")), (100006, mk("beta"))],
+        "doc_id long, text string",
+    ).select("doc_id", "text", F.length("text").cast("long").alias("n_chars"))
+    return _docs(spark).select("doc_id", "text", "n_chars").unionByName(injected)
+
+
 def test_decisions_match_registered_query(spark):
     out = run_corpus_build(_docs(spark))
     composed = {(r.doc_id, r.decision) for r in out.decisions.collect()}
@@ -171,34 +198,11 @@ def test_leakage_repair_audits_clean(spark):
     docs by construction (train side unchanged). The repair must agree
     doc-for-doc with the registered split_leakage_repair differential
     restricted to clean-kept docs."""
-    from pyspark.sql import functions as F
-
     from soccer_data_pipeline_spark.operators.corpus import (
         split_leakage_actions,
     )
 
-    # the sf0.001 fixture audits clean AFTER cleaning (dedup-before-
-    # split doing its job), so inject one leaked pair that every
-    # cleaning tier passes: a shared 8-gram of single-char tokens
-    # (15 chars — SHORTER than the winnowing k=16, so the run cannot
-    # contain one full winnowing k-gram and the verbatim tier cannot
-    # see it; this is precisely the sub-fingerprint leakage the n-gram
-    # audit exists to catch) in otherwise-unrelated quality-passing
-    # docs, ids hashing to train (100000) and val (100006) under the
-    # md5 split bucket.
-    shared = "j k l m n o p q"
-    mk = lambda stem: (  # noqa: E731
-        "a "
-        + " ".join(f"{stem}{i}" for i in range(30))
-        + f" {shared} "
-        + " ".join(f"{stem}{i}" for i in range(30, 60))
-    )
-    injected = spark.createDataFrame(
-        [(100000, mk("alpha")), (100006, mk("beta"))],
-        "doc_id long, text string",
-    ).select("doc_id", "text", F.length("text").cast("long").alias("n_chars"))
-    docs = _docs(spark).select("doc_id", "text", "n_chars").unionByName(injected)
-    out = run_corpus_build(docs, leakage_ngram=8)
+    out = run_corpus_build(_docs_with_leaked_pair(spark), leakage_ngram=8)
     actions = {(r.doc_id, r.action) for r in out.leakage.collect()}
     quarantined = {d for d, a in actions if a == "quarantine_leakage"}
     assert 100006 in quarantined  # the injected val doc is repaired away
@@ -440,3 +444,104 @@ def test_corpus_build_train_order(spark):
         for r in shuffle_order(kept, seed="7").collect()
     }
     assert got == ref
+
+
+def test_all_optional_stages_compose(spark):
+    """Every optional stage in ONE build — decontamination, semantic
+    dedup, budgeted selection, leakage repair, training order — each
+    folding its drops into the one decisions ledger: decisions covers
+    each input doc exactly once, the corpus is exactly the keep set,
+    each stage's dropped ids carry that stage's reason unless an
+    earlier stage already dropped them, and the manifest accounts for
+    the corpus."""
+    docs = _docs_with_leaked_pair(spark)
+    out = run_corpus_build(
+        docs,
+        # docs 5, 7 and 13 are clean-kept and outside the fixture's
+        # one semantic dup pair (1, 257)
+        benchmark=_docs(spark).where("doc_id IN (5, 7, 13)").select("text"),
+        embeddings=load_table(spark, SF, "embeddings"),
+        # above the 608 tokens of the score-1000 docs (the leaked pair
+        # among them), below the ~1540 that survive the earlier stages
+        token_budget=1200,
+        leakage_ngram=8,
+        order_seed="7",
+    )
+    dec_rows = out.decisions.collect()
+    dec = {r.doc_id: r.decision for r in dec_rows}
+    input_ids = [r.doc_id for r in docs.select("doc_id").collect()]
+    assert len(dec_rows) == len(dec) == len(input_ids)
+    assert set(dec) == set(input_ids)
+
+    corpus = out.corpus.collect()
+    keep = {d for d, v in dec.items() if v == "keep"}
+    assert len(corpus) == len(keep) and {r.doc_id for r in corpus} == keep
+    assert sorted(r.train_order for r in corpus) == list(range(len(corpus)))
+
+    stage_drops = [
+        ("drop_contaminated", {
+            r.doc_id for r in out.contamination.collect()
+            if r.action == "drop_contaminated"
+        }),
+        ("drop_semantic", {
+            r.doc_id for r in out.semantic.collect()
+            if r.action == "drop_semantic"
+        }),
+        ("drop_budget", {r.doc_id for r in out.selection.collect() if not r.selected}),
+        ("quarantine_leakage", {
+            r.doc_id for r in out.leakage.collect()
+            if r.action == "quarantine_leakage"
+        }),
+    ]
+    stage_reasons = {reason for reason, _ in stage_drops}
+    earlier = {d for d, v in dec.items() if v not in stage_reasons | {"keep"}}
+    for reason, dropped in stage_drops:
+        assert dropped, f"no {reason} drops on this fixture"
+        assert {d for d, v in dec.items() if v == reason} == dropped - earlier
+        earlier |= dropped
+    assert 100006 in earlier  # the injected leaked val doc
+
+    m = out.manifest.collect()
+    assert sum(r.n_docs for r in m) == len(corpus)
+    assert sum(r.total_chars for r in m) == sum(r.n_chars for r in corpus)
+
+
+def _group_jobs(spark, group, action) -> int:
+    """Run ``action`` under Spark job group ``group``; → its job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_writes_read_materialized_ledger(spark, tmp_path):
+    """Materialization guard: once run_corpus_build returns, the
+    decisions ledger is materialized — writing it is one scan job — and
+    the corpus write re-runs nothing of cleaning or SemDeDup: it costs
+    no more jobs than the same write over a ledger read back from
+    storage, which has no upstream lineage at all."""
+    from pyspark.sql import functions as F
+
+    docs = _docs(spark)
+    out = run_corpus_build(docs, embeddings=load_table(spark, SF, "embeddings"))
+    dec_path = str(tmp_path / "decisions")
+    assert _group_jobs(
+        spark, "guard-decisions",
+        lambda: out.decisions.write.parquet(dec_path),
+    ) == 1
+
+    corpus_jobs = _group_jobs(
+        spark, "guard-corpus",
+        lambda: out.corpus.write.parquet(str(tmp_path / "corpus")),
+    )
+    stored = spark.read.parquet(dec_path).where(F.col("decision") == "keep")
+    ref_jobs = _group_jobs(
+        spark, "guard-stored-ledger",
+        lambda: docs.join(stored, "doc_id", "left_semi")
+        .write.parquet(str(tmp_path / "ref")),
+    )
+    assert 0 < corpus_jobs <= ref_jobs
